@@ -39,6 +39,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from debezium_incubator_spark.lake.checkpoint import _atomic_write
+
 BUCKET_COL = "_bucket"
 
 
@@ -54,15 +56,6 @@ def bucket_expr(bucket_cols: list[str], num_buckets: int):
     across buckets (skew story for 100 TB).
     """
     return F.pmod(F.xxhash64(*[F.col(c) for c in bucket_cols]), F.lit(num_buckets)).cast("int")
-
-
-def _atomic_write(path: str, data: str) -> None:
-    tmp = f"{path}.tmp.{uuid.uuid4().hex[:8]}"
-    with open(tmp, "w") as f:
-        f.write(data)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, path)
 
 
 class LakeTable:

@@ -4,14 +4,12 @@
   (FileOffsetWriter.isOffsetProcessed, FileOffsetWriter.java:92-104;
   LcrEventHandler.java:53-65).
 * D2 last-writer-wins per key — the north rule's
-  ``row_number() OVER (PARTITION BY key ORDER BY offset DESC) = 1``.
-  Two implementations:
-    - ``lww_latest``: hash-aggregate ``max_by(struct(payload),
-      struct(order))`` — partial aggregation (map-side combine) makes it
-      skew-proof at 100 TB without salting, no per-key sort;
-    - ``lww_latest_window``: the literal window form, with an optional
-      salted two-phase variant for hot keys (north-rule salting story).
-  Tests assert both produce identical results.
+  ``row_number() OVER (PARTITION BY key ORDER BY offset DESC) = 1``,
+  computed as ONE hash aggregate, ``lww_latest``: ``max_by(struct(payload),
+  struct(order))``. Partial aggregation (map-side combine) makes it
+  skew-proof at 100 TB without salting and with no per-key sort. The
+  DuckDB ``row_number()`` oracles stay the reference definition; the
+  merge (operators/merge.py) routes through this one function.
 """
 
 from __future__ import annotations
@@ -64,7 +62,7 @@ def lww_latest(
     order_cols: list[str],
     payload_cols: list[str] | None = None,
 ) -> DataFrame:
-    """D2 (hash-agg form) — latest row per key by the total event order.
+    """D2 — latest row per key by the total event order.
 
     ``max_by`` runs as a partial-then-final hash aggregate: each map task
     reduces its slice of a hot key before the shuffle, so a key with 10^8
@@ -78,50 +76,3 @@ def lww_latest(
         )
     )
     return agg.select(*key_cols, *[F.col(f"__top.{c}").alias(c) for c in payload_cols])
-
-
-def lww_latest_window(
-    df: DataFrame,
-    key_cols: list[str],
-    order_cols: list[str],
-    salt_buckets: int | None = None,
-) -> DataFrame:
-    """D2 (window form) — ``row_number() = 1`` per key over offset desc.
-
-    With ``salt_buckets``, runs two phases: first per (key, salt) — the
-    salted repartition spreads a hot key over ``salt_buckets`` reducers —
-    then per key over the survivors (≤ salt_buckets rows per key).
-    """
-    from pyspark.sql.window import Window
-
-    order = [F.col(c).desc() for c in order_cols]
-    if salt_buckets and salt_buckets > 1:
-        salted = df.withColumn(
-            "__salt", F.pmod(F.xxhash64(*[F.col(c) for c in order_cols]), F.lit(salt_buckets))
-        )
-        w1 = Window.partitionBy(*key_cols, "__salt").orderBy(*order)
-        phase1 = (
-            salted.withColumn("__rn", F.row_number().over(w1))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn", "__salt")
-        )
-        df = phase1
-    w = Window.partitionBy(*key_cols).orderBy(*order)
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-
-
-def salted_repartition(df: DataFrame, cols: list[str], salt_buckets: int) -> DataFrame:
-    """North-rule named primitive: spread hot keys over ``salt_buckets``
-    sub-partitions — ``repartition(hash(cols…, salt))`` — so a single hot
-    repo/key cannot pin one reducer. Downstream per-key operators that
-    need the full key group (windows) must then run a second phase over
-    the salted survivors (see lww_latest_window)."""
-    salted = df.withColumn(
-        "__salt", F.pmod(F.xxhash64(*[F.col(c) for c in cols], F.monotonically_increasing_id()), F.lit(salt_buckets))
-    )
-    out = salted.repartition(*[F.col(c) for c in cols], F.col("__salt"))
-    return out.drop("__salt")

@@ -164,18 +164,6 @@ def normalize_content(s: pd.Series) -> pd.Series:
     return arr.to_pandas()
 
 
-@pandas_udf(T.StringType())
-def sha256_arrow(s: pd.Series) -> pd.Series:
-    """Arrow-vectorized sha256 (hex). The hot path uses the JVM-side
-    F.sha2 instead — this exists as the pandas/Arrow variant required by
-    the design contract, and as a cross-check in tests."""
-    import hashlib
-
-    return s.map(
-        lambda v: hashlib.sha256(v.encode("utf-8")).hexdigest() if v is not None else None
-    )
-
-
 def fingerprint(col: Column) -> Column:
     """The per-row invariant: sha256 hex of content (JVM-side, codegen)."""
     return F.lower(F.sha2(col, 256))

@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
-DELETE_OPS = ("d", "t")
+from debezium_incubator_spark.operators.envelope import DELETE_OPS
 
 
 def _versions(

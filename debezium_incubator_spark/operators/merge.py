@@ -26,39 +26,44 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from debezium_incubator_spark.lake.table import BUCKET_COL, LakeTable
+from debezium_incubator_spark.operators.dedup import lww_latest
+from debezium_incubator_spark.operators.envelope import DELETE_OPS, OP_TOMBSTONE
 
-DEFAULT_DELETE_OPS = ("d", "t")
+# the engine's event columns: every batch_stats_rows / merge_upsert
+# caller uses exactly these, so they are constants, not parameters
+OP_COL = "op"
+OFFSET_COL = "offset"
 
 
-def batch_stats_rows(
-    b,
-    key_cols: list[str],
-    order0: str,
-    op_col: str = "op",
-    delete_ops: tuple[str, ...] = DEFAULT_DELETE_OPS,
-):
-    """ONE skinny stats pass over a bucketed batch: per-bucket max
-    offset (checkpoint marks), row/delete/tombstone counts, and measured
-    key bytes (drives the broadcast-vs-fused merge decision). Split out
-    of merge_upsert so a driver loop can PREFETCH the next epoch's stats
-    concurrently with the current epoch's write (the two Spark actions
-    per epoch are the fixed driver cost that caps scaling at small
-    epochs — see BENCH.md)."""
+def _deleted():
+    return F.col(OP_COL).isin(*DELETE_OPS)
+
+
+def stats_aggs(key_cols: list[str], order0: str) -> list:
+    """THE per-bucket batch-stats aggregation: max offset (checkpoint
+    marks), row/delete/tombstone counts, and measured key bytes (drives
+    the broadcast-vs-fused merge decision). batch_stats_rows and the
+    orchestrator's shared per-(table, bucket) pass both group by it."""
     key_len = sum(
         (F.coalesce(F.length(F.col(k).cast("string")), F.lit(0)) for k in key_cols),
         F.lit(0),
     )
-    return (
-        b.groupBy(BUCKET_COL)
-        .agg(
-            F.max(order0).alias("max_off"),
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col(op_col).isin(*delete_ops).cast("long")).alias("n_del"),
-            F.sum((F.col(op_col) == "t").cast("long")).alias("n_tomb"),
-            F.sum(key_len).alias("key_bytes"),
-        )
-        .collect()
-    )
+    return [
+        F.max(order0).alias("max_off"),
+        F.count(F.lit(1)).alias("n"),
+        F.sum(_deleted().cast("long")).alias("n_del"),
+        F.sum((F.col(OP_COL) == OP_TOMBSTONE).cast("long")).alias("n_tomb"),
+        F.sum(key_len).alias("key_bytes"),
+    ]
+
+
+def batch_stats_rows(b, key_cols: list[str], order0: str):
+    """ONE skinny stats pass over a bucketed batch (see stats_aggs).
+    Split out of merge_upsert so a driver loop can PREFETCH the next
+    epoch's stats concurrently with the current epoch's write (the two
+    Spark actions per epoch are the fixed driver cost that caps scaling
+    at small epochs — see BENCH.md)."""
+    return b.groupBy(BUCKET_COL).agg(*stats_aggs(key_cols, order0)).collect()
 
 
 def merge_upsert(
@@ -66,16 +71,12 @@ def merge_upsert(
     batch,
     key_cols: list[str],
     order_cols: list[str],
-    op_col: str = "op",
-    delete_ops: tuple[str, ...] = DEFAULT_DELETE_OPS,
     summary: dict | None = None,
     after_set_col: str | None = None,
     broadcast_keys_max: int = 4_000_000,
     broadcast_key_bytes_max: int = 64 * 1024 * 1024,
     target_rows_per_write_task: int = 500_000,
     assume_unique_keys: bool = False,
-    lww_strategy: str = "agg",
-    salt_buckets: int = 16,
     extra_counters: dict | None = None,
     stats_rows: list | None = None,  # prefetched batch_stats_rows result
     # (MUST describe exactly this batch's post-guard rows — the run()
@@ -85,12 +86,6 @@ def merge_upsert(
     # BUCKET_COL was computed by THIS table's bucket function (the
     # engine computes it before the replay guard); default False
     # recomputes — a foreign/stale bucket column would corrupt layout
-    winner_broadcast_max: int = 0,  # winner-join LWW off by default:
-    # measured slower than the fused max_by at this payload size — the
-    # full-row dedup still shuffles the payload and the broadcast build
-    # adds driver time, while the avoided SortAggregate wasn't the
-    # bottleneck (data movement is). Kept as a knob for workloads with
-    # very wide payloads and few keys.
 ) -> tuple[int, dict]:
     """Apply one change batch; returns (new_table_version, batch_stats).
 
@@ -114,7 +109,6 @@ def merge_upsert(
     )
     order0 = order_cols[0]
     target_empty = not m["buckets"]
-    stats_fut = stats_pool = None
     if stats_rows is None and target_empty:
         # EMPTY-target fast path (bootstrap): the stats only feed the
         # manifest summary, which commit assembles AFTER the data write —
@@ -127,51 +121,31 @@ def merge_upsert(
             return table.version(), {"max_offsets": {}, "counters": {"events_in": 0}}
         from concurrent.futures import ThreadPoolExecutor
 
-        stats_pool = ThreadPoolExecutor(max_workers=1)
-        stats_fut = stats_pool.submit(
-            batch_stats_rows, b, key_cols, order0, op_col, delete_ops
-        )
-    elif stats_rows is None:
-        stats_rows = batch_stats_rows(b, key_cols, order0, op_col, delete_ops)
-    if stats_fut is None and not stats_rows:
+        # the pool's shutdown is scoped from the submit on: a plan-
+        # construction error must not leak its worker thread
+        with ThreadPoolExecutor(max_workers=1) as stats_pool:
+            stats_fut = stats_pool.submit(batch_stats_rows, b, key_cols, order0)
+            latest = _batch_latest(
+                b, key_cols, order_cols, payload_cols, after_set_col, assume_unique_keys
+            )
+            out = latest.filter(~_deleted()).select(*key_cols, *payload_cols, BUCKET_COL)
+            return _commit_overlapped(table, m, out, stats_fut, summary, extra_counters)
+    if stats_rows is None:
+        stats_rows = batch_stats_rows(b, key_cols, order0)
+    if not stats_rows:
         return table.version(), {"max_offsets": {}, "counters": {"events_in": 0}}
 
-    if stats_fut is None:
-        changed = sorted(int(r[BUCKET_COL]) for r in stats_rows)
-        max_offsets = {str(int(r[BUCKET_COL])): int(r["max_off"]) for r in stats_rows}
-        events_in = sum(int(r["n"]) for r in stats_rows)
-        n_del = sum(int(r["n_del"]) for r in stats_rows)
-        n_tomb = sum(int(r["n_tomb"]) for r in stats_rows)
-        # estimated driver-side size of the broadcast key set: measured key
-        # bytes + ~48 B/row HashedRelation overhead (gate on BYTES, not rows:
-        # 4M long (repo, path) strings would be hundreds of MB on the driver)
-        key_bytes_est = sum(int(r["key_bytes"] or 0) for r in stats_rows) + 48 * events_in
+    changed = sorted(int(r[BUCKET_COL]) for r in stats_rows)
+    events_in = sum(int(r["n"]) for r in stats_rows)
+    # estimated driver-side size of the broadcast key set: measured key
+    # bytes + ~48 B/row HashedRelation overhead (gate on BYTES, not rows:
+    # 4M long (repo, path) strings would be hundreds of MB on the driver)
+    key_bytes_est = sum(int(r["key_bytes"] or 0) for r in stats_rows) + 48 * events_in
 
-    extra = [c for c in (op_col, BUCKET_COL, after_set_col) if c]
+    latest = _batch_latest(
+        b, key_cols, order_cols, payload_cols, after_set_col, assume_unique_keys
+    )
     partial = after_set_col is not None and not assume_unique_keys
-    if partial:
-        # cell set-flag batches: field-wise fold, NOT winner-only LWW —
-        # several partial updates to one key in one epoch each
-        # contribute their set fields (review r5-2 #1); output carries a
-        # SYNTHESIZED after_set so the coalesce below fills exactly the
-        # never-set fields from the current row
-        latest = _lww_partial(
-            b, key_cols, order0, payload_cols, op_col, after_set_col, delete_ops
-        )
-    elif assume_unique_keys:
-        # snapshot bootstrap fast path: rows are unique per key by
-        # construction (a consistent table read) — skip the LWW
-        # shuffle of full payloads
-        latest = b.select(*key_cols, *payload_cols, *extra)
-    elif lww_strategy == "agg":
-        latest = _lww(b, key_cols, order_cols, payload_cols + extra)
-    else:
-        from debezium_incubator_spark.operators.dedup import lww_latest_window
-
-        salt = salt_buckets if lww_strategy == "window_salted" else None
-        latest = lww_latest_window(b, key_cols, order_cols, salt_buckets=salt).select(
-            *key_cols, *payload_cols, *extra
-        )
 
     target_rows = 0 if target_empty else table.row_count(buckets=changed, manifest=m)
     # Strategy choice from table stats (≙ a cost-based MERGE plan):
@@ -195,8 +169,7 @@ def merge_upsert(
     )
 
     if target_empty:
-        upserts = latest.filter(~F.col(op_col).isin(*delete_ops))
-        out = upserts.select(*key_cols, *payload_cols, BUCKET_COL)
+        out = latest.filter(~_deleted()).select(*key_cols, *payload_cols, BUCKET_COL)
     elif use_broadcast:
         # `latest` feeds both the broadcast key set and the upsert write —
         # persist the slim deduped form so the unwrap+LWW pipeline runs
@@ -204,7 +177,7 @@ def merge_upsert(
         from pyspark import StorageLevel
 
         latest = latest.persist(StorageLevel.MEMORY_AND_DISK)
-        upserts = latest.filter(~F.col(op_col).isin(*delete_ops))
+        upserts = latest.filter(~_deleted())
         keys = F.broadcast(latest.select(*key_cols))
 
         current = table.with_bucket(table.read(spark, buckets=changed), m)
@@ -212,28 +185,26 @@ def merge_upsert(
 
         if after_set_col:
             upserts = _coalesce_partial(
-                upserts, current, key_cols, payload_cols, after_set_col, op_col
+                upserts, current, key_cols, payload_cols, after_set_col
             )
         upserts = upserts.select(*key_cols, *payload_cols, BUCKET_COL)
         out = survivors.select(*key_cols, *payload_cols, BUCKET_COL).unionByName(upserts)
     else:
         # fused: current rows become pseudo-events ordered below all real
-        # events, then one LWW over the union decides every key. When
-        # the key universe fits a broadcast, the winner-join form keeps
-        # the wide payload out of the aggregate shuffle entirely.
+        # events, then one LWW over the union decides every key
         current = table.with_bucket(table.read(spark, buckets=changed), m)
         order_types = dict(b.dtypes)
         cur_cols = [
             *key_cols,
             *payload_cols,
-            F.lit("r").alias(op_col),
+            F.lit("r").alias(OP_COL),
             BUCKET_COL,
             *[
                 (F.lit(-(1 << 62)) if i == 0 else F.lit(None))
                 .cast(order_types[c])
                 .alias(c)
                 for i, c in enumerate(order_cols)
-                if c != op_col
+                if c != OP_COL
             ],
         ]
         if partial:
@@ -247,82 +218,16 @@ def merge_upsert(
         ev = b.select(*cur_ev.columns)
         unioned = cur_ev.unionByName(ev)
         if partial:
-            fused = _lww_partial(
-                unioned, key_cols, order0, payload_cols, op_col, after_set_col,
-                delete_ops,
-            )
+            fused = _lww_partial(unioned, key_cols, order0, payload_cols, after_set_col)
         else:
-            lww_fn = (
-                _lww_winner_join
-                if events_in + target_rows <= winner_broadcast_max
-                else _lww
+            fused = lww_latest(
+                unioned, key_cols, order_cols, payload_cols + [OP_COL, BUCKET_COL]
             )
-            fused = lww_fn(
-                unioned, key_cols, order_cols, payload_cols + [op_col, BUCKET_COL]
-            )
-        out = fused.filter(~F.col(op_col).isin(*delete_ops)).select(
-            *key_cols, *payload_cols, BUCKET_COL
-        )
+        out = fused.filter(~_deleted()).select(*key_cols, *payload_cols, BUCKET_COL)
 
-    def _finalize_stats(rows):
-        ch = sorted(int(r[BUCKET_COL]) for r in rows)
-        mo = {str(int(r[BUCKET_COL])): int(r["max_off"]) for r in rows}
-        cs = {
-            "events_in": sum(int(r["n"]) for r in rows),
-            "deletes": sum(int(r["n_del"]) for r in rows),
-            "tombstones": sum(int(r["n_tomb"]) for r in rows),
-            "buckets_touched": len(ch),
-        }
-        if extra_counters:
-            cs.update(extra_counters)
-        fs = dict(summary or {})
-        fs["max_offsets"] = mo
-        fs["counters"] = cs
-        return mo, cs, fs
-
-    if stats_fut is not None:
-        # overlapped path: the stats job has been running alongside plan
-        # construction; commit resolves it AFTER the data write. The
-        # write shuffle is sized from the PLAN's size estimate (no extra
-        # job) toward ~256 MB per task, clamped sanely; replace_buckets
-        # covers the whole (empty) bucket range so the manifest lists
-        # exactly the buckets the write produced.
-        holder: dict = {}
-
-        def _summary_fn():
-            holder["res"] = _finalize_stats(stats_fut.result())
-            return holder["res"][2]
-
-        # plan-size estimates are only trustworthy for file-scan-rooted
-        # plans (a local relation reported ~TB for one row — 11k write
-        # tasks); clamp to 8× the cluster's parallelism so a bogus
-        # estimate costs bounded scheduling, while a genuinely huge
-        # snapshot still spreads its buckets over many salted writers
-        try:
-            est_bytes = int(
-                str(out._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-            )
-        except Exception:
-            est_bytes = 0
-        par_cap = 8 * spark.sparkContext.defaultParallelism
-        write_tasks = int(
-            max(m["num_buckets"], min(est_bytes // (256 << 20), par_cap))
-        )
-        try:
-            version = table.commit(
-                out,
-                replace_buckets=range(m["num_buckets"]),
-                summary_fn=_summary_fn,
-                write_tasks=write_tasks,
-            )
-        finally:
-            stats_pool.shutdown(wait=True)
-            if latest.is_cached:
-                latest.unpersist()
-        mo, cs, _ = holder["res"]
-        return version, {"max_offsets": mo, "counters": cs}
-
-    max_offsets, counters, full_summary = _finalize_stats(stats_rows)
+    max_offsets, counters, full_summary = _finalize_stats(
+        stats_rows, summary, extra_counters
+    )
     # size the CoW write shuffle by estimated output volume: a touched
     # 200 GB bucket must never funnel through ONE reducer (the salt in
     # LakeTable.commit spreads it; partitionBy keeps the layout)
@@ -340,9 +245,81 @@ def merge_upsert(
     return version, {"max_offsets": max_offsets, "counters": counters}
 
 
-def _lww_partial(
-    df, key_cols, order0, payload_cols, op_col, after_set_col, delete_ops
+def _batch_latest(
+    b, key_cols, order_cols, payload_cols, after_set_col, assume_unique_keys
 ):
+    """The batch's per-key latest rows: payload + op + bucket (+ the
+    set-flag column) for every key the batch touches."""
+    extra = [c for c in (OP_COL, BUCKET_COL, after_set_col) if c]
+    if assume_unique_keys:
+        # snapshot bootstrap fast path: rows are unique per key by
+        # construction (a consistent table read) — skip the LWW
+        # shuffle of full payloads
+        return b.select(*key_cols, *payload_cols, *extra)
+    if after_set_col is not None:
+        # cell set-flag batches: field-wise fold, NOT winner-only LWW —
+        # several partial updates to one key in one epoch each
+        # contribute their set fields; output carries a
+        # SYNTHESIZED after_set so the broadcast path's coalesce fills
+        # exactly the never-set fields from the current row
+        return _lww_partial(b, key_cols, order_cols[0], payload_cols, after_set_col)
+    return lww_latest(b, key_cols, order_cols, payload_cols + extra)
+
+
+def _finalize_stats(rows, summary, extra_counters):
+    """Stats rows → (max_offsets, counters, commit summary)."""
+    mo = {str(int(r[BUCKET_COL])): int(r["max_off"]) for r in rows}
+    cs = {
+        "events_in": sum(int(r["n"]) for r in rows),
+        "deletes": sum(int(r["n_del"]) for r in rows),
+        "tombstones": sum(int(r["n_tomb"]) for r in rows),
+        "buckets_touched": len(mo),
+    }
+    if extra_counters:
+        cs.update(extra_counters)
+    fs = dict(summary or {})
+    fs["max_offsets"] = mo
+    fs["counters"] = cs
+    return mo, cs, fs
+
+
+def _commit_overlapped(table, m, out, stats_fut, summary, extra_counters):
+    """Commit ``out`` into an empty target while the stats job
+    (``stats_fut``) is still running; commit resolves it AFTER the data
+    write. The write shuffle is sized from the PLAN's size estimate (no
+    extra job) toward ~256 MB per task, clamped sanely; replace_buckets
+    covers the whole (empty) bucket range so the manifest lists exactly
+    the buckets the write produced."""
+    holder: dict = {}
+
+    def _summary_fn():
+        holder["res"] = _finalize_stats(stats_fut.result(), summary, extra_counters)
+        return holder["res"][2]
+
+    # plan-size estimates are only trustworthy for file-scan-rooted
+    # plans (a local relation reported ~TB for one row — 11k write
+    # tasks); clamp to 8× the cluster's parallelism so a bogus
+    # estimate costs bounded scheduling, while a genuinely huge
+    # snapshot still spreads its buckets over many salted writers
+    try:
+        est_bytes = int(
+            str(out._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+        )
+    except Exception:
+        est_bytes = 0
+    par_cap = 8 * out.sparkSession.sparkContext.defaultParallelism
+    write_tasks = int(max(m["num_buckets"], min(est_bytes // (256 << 20), par_cap)))
+    version = table.commit(
+        out,
+        replace_buckets=range(m["num_buckets"]),
+        summary_fn=_summary_fn,
+        write_tasks=write_tasks,
+    )
+    mo, cs, _ = holder["res"]
+    return version, {"max_offsets": mo, "counters": cs}
+
+
+def _lww_partial(df, key_cols, order0, payload_cols, after_set_col):
     """Field-wise LWW fold for cell set-flag batches (review r5-2 #1:
     winner-only LWW silently discarded earlier partial updates' fields
     when a key had several events in one epoch).
@@ -362,15 +339,15 @@ def _lww_partial(
     hash aggregation — no per-event iteration, no payload sort."""
     from pyspark.sql.window import Window
 
-    is_del = F.col(op_col).isin(*delete_ops)
+    is_del = _deleted()
     w = Window.partitionBy(*key_cols)
     df = df.withColumn("__last_del", F.max(F.when(is_del, F.col(order0))).over(w))
     # strictly below every real offset INCLUDING the fused path's
     # -(1<<62) current-row sentinel (which must count as pre-delete)
     post = F.col(order0) > F.coalesce(F.col("__last_del"), F.lit(-(1 << 62) - 1))
-    sets_all = (F.col(op_col) != "u") | F.col(after_set_col).isNull()
+    sets_all = (F.col(OP_COL) != "u") | F.col(after_set_col).isNull()
     aggs = [
-        F.max_by(F.col(op_col), F.col(order0)).alias("__wop"),
+        F.max_by(F.col(OP_COL), F.col(order0)).alias("__wop"),
         F.max(F.col(BUCKET_COL)).alias(BUCKET_COL),
         # per-key constant (window max); carried so the output can mark
         # delete-reset keys as FULL images (review r5-3 #1 below)
@@ -409,55 +386,13 @@ def _lww_partial(
     return g.select(
         *key_cols,
         *payload_cols,
-        F.col("__wop").alias(op_col),
+        F.col("__wop").alias(OP_COL),
         BUCKET_COL,
         out_set.alias(after_set_col),
     )
 
 
-def _lww(df, key_cols, order_cols, payload_cols):
-    order = F.struct(*[F.col(c) for c in order_cols])
-    agg = df.groupBy(*key_cols).agg(
-        F.max_by(F.struct(*[F.col(c) for c in payload_cols]), order).alias("__top")
-    )
-    return agg.select(*key_cols, *[F.col(f"__top.{c}").alias(c) for c in payload_cols])
-
-
-def _lww_winner_join(df, key_cols, order_cols, payload_cols):
-    """LWW without SORTS and with minimal payload movement.
-
-    Why: ``max_by(struct(payload), struct(order))`` has a non-mutable
-    (struct) aggregation buffer, so Catalyst plans it as SortAggregate —
-    the full payload gets SORTED twice (map side + reduce side). Here:
-
-    1. winners = groupBy(key).max(offset) — primitive long buffer →
-       a true partial+final HashAggregate over slim rows (skew-proof);
-    2. payload joins back MAP-SIDE against the broadcast winners —
-       the wide content column never rides an aggregate;
-    3. duplicate-offset replays (byte-identical rows by the total-order
-       contract: within a key, the order value uniquely determines the
-       event) collapse with a full-row dropDuplicates — a grouping-only
-       HashAggregate, again sort-free.
-
-    Requires the first order column alone to be a total order per key
-    (true for the reference's log positions; extra order columns are
-    tie-break niceties for byte-identical replays only).
-    """
-    order0 = order_cols[0]
-    winners = (
-        df.groupBy(*key_cols)
-        .agg(F.max(order0).alias("__woff"))
-        .select(
-            *[F.col(k).alias(f"__wk_{k}") for k in key_cols], F.col("__woff")
-        )
-    )
-    cond = [F.col(k) == F.col(f"__wk_{k}") for k in key_cols]
-    cond.append(F.col(order0) == F.col("__woff"))
-    matched = df.join(F.broadcast(winners), cond).select(*key_cols, *payload_cols)
-    return matched.dropDuplicates()
-
-
-def _coalesce_partial(upserts, current, key_cols, payload_cols, after_set_col, op_col):
+def _coalesce_partial(upserts, current, key_cols, payload_cols, after_set_col):
     """Cell-level set flags: a payload field absent from ``after_set`` on
     an update keeps the current table value (null-vs-unset distinction,
     CellData 'set' sub-field, CellData.java:27-87).
@@ -472,7 +407,7 @@ def _coalesce_partial(upserts, current, key_cols, payload_cols, after_set_col, o
     cols = []
     for c in payload_cols:
         keep_current = (
-            (F.col(op_col) == "u")
+            (F.col(OP_COL) == "u")
             & F.col(after_set_col).isNotNull()
             & ~F.array_contains(F.col(after_set_col), c)
         )

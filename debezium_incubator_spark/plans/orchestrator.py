@@ -33,7 +33,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debezium_incubator_spark.lake.checkpoint import _atomic_write
-from debezium_incubator_spark.lake.table import LakeTable
+from debezium_incubator_spark.lake.table import BUCKET_COL, LakeTable
+from debezium_incubator_spark.operators.merge import OFFSET_COL, stats_aggs
 from debezium_incubator_spark.plans.pipeline import CDCEngine
 from debezium_incubator_spark.streaming.stream import StreamingCDC
 
@@ -273,8 +274,10 @@ class MultiTableCDC:
         same prefilter inputs (key cols, table regexes, field blacklist)
         and the same bucket function (bucket cols + count) — so ONE
         prefiltered per-(table, bucket) stats pass over a shared batch
-        is row-exact for all of them. Mid-stream DDL can add tables, so
-        this is re-checked per micro-batch (manifest reads are cached)."""
+        is row-exact for all of them. The op/offset columns and delete
+        ops are merge.py constants, so no engine can differ there.
+        Mid-stream DDL can add tables, so this is re-checked per
+        micro-batch (manifest reads are cached)."""
 
         def sig(e):
             m = e.table.manifest()
@@ -395,8 +398,8 @@ class MultiTableCDC:
                 for r in batch.groupBy(F.col(table_field).alias("__t"))
                 .agg(
                     F.count(F.lit(1)).alias("n"),
-                    F.min("offset").alias("lo"),
-                    F.max("offset").alias("top"),
+                    F.min(OFFSET_COL).alias("lo"),
+                    F.max(OFFSET_COL).alias("top"),
                 )
                 .collect()
             }
@@ -406,7 +409,8 @@ class MultiTableCDC:
             # N per-table batch_stats_rows collects inside merge_upsert —
             # N engines were re-deriving identical stats from the same
             # cached batch, one extra Spark job per table per trigger
-            # (guide §2.4: do the work once). Sound when every engine
+            # (guide §2.4: do the work once). It aggregates with the same
+            # merge.stats_aggs as batch_stats_rows. Sound when every engine
             # shares the stats-relevant config (same prefilter + bucket
             # function — checked below); a table consumes its slice of
             # this pass only when the slice lies strictly beyond every
@@ -415,26 +419,11 @@ class MultiTableCDC:
             bucket_stats: dict[str, list] = {}
             shared_stats_ran = bool(self.engines) and self._stats_homogeneous()
             if shared_stats_ran:
-                from debezium_incubator_spark.lake.table import BUCKET_COL
-
                 any_eng = next(iter(self.engines.values()))
                 pre = any_eng.table.with_bucket(any_eng._prefilter(batch))
-                key_len = sum(
-                    (
-                        F.coalesce(F.length(F.col(k).cast("string")), F.lit(0))
-                        for k in any_eng.key_cols
-                    ),
-                    F.lit(0),
-                )
                 for r in (
                     pre.groupBy(F.col(table_field).alias("__t"), F.col(BUCKET_COL))
-                    .agg(
-                        F.max("offset").alias("max_off"),
-                        F.count(F.lit(1)).alias("n"),
-                        F.sum(F.col("op").isin("d", "t").cast("long")).alias("n_del"),
-                        F.sum((F.col("op") == "t").cast("long")).alias("n_tomb"),
-                        F.sum(key_len).alias("key_bytes"),
-                    )
+                    .agg(*stats_aggs(any_eng.key_cols, OFFSET_COL))
                     .collect()
                 ):
                     bucket_stats.setdefault(r["__t"], []).append(r)

@@ -16,6 +16,8 @@ from __future__ import annotations
 import os
 import shutil
 
+from debezium_incubator_spark.lake.checkpoint import _atomic_write
+
 
 def expire_changelog_files(
     changelog_dir: str,
@@ -132,17 +134,16 @@ def expire_changelog_files(
     # persist first-seen state (files that became readable or were moved
     # drop out automatically: only this pass's sightings are kept)
     try:
-        tmp = f"{state_path}.tmp.{os.getpid()}"
-        with open(tmp, "w") as f:
-            json.dump(
+        _atomic_write(
+            state_path,
+            json.dumps(
                 {
                     "unreadable": seen_this_pass,
                     "archived_through": archived_through,
                     "deleted_through": deleted_through,
-                },
-                f,
-            )
-        os.replace(tmp, state_path)
+                }
+            ),
+        )
     except OSError:
         pass  # state is an optimization; next pass restarts the clock
     return moved
@@ -194,10 +195,7 @@ def reprocess_errors(changelog_dir: str) -> list[str]:
                 state = json.load(f)
             for fn in restored:
                 state.get("unreadable", {}).pop(fn, None)
-            tmp = f"{state_path}.tmp.{os.getpid()}"
-            with open(tmp, "w") as f:
-                json.dump(state, f)
-            os.replace(tmp, state_path)
+            _atomic_write(state_path, json.dumps(state))
         except (OSError, ValueError):
             pass
     return restored
@@ -258,10 +256,7 @@ def restore_archived(
             state = {}
         state["archived_through"] = -1
         try:
-            tmp = f"{state_path}.tmp.{os.getpid()}"
-            with open(tmp, "w") as f:
-                json.dump(state, f)
-            os.replace(tmp, state_path)
+            _atomic_write(state_path, json.dumps(state))
         except OSError:
             pass
     return restored

@@ -177,40 +177,42 @@ def test_gen_partial_updates_fixture_not_vacuous(spark):
 
 
 def test_merge_lww_strategies_equivalent(spark, tmp_table):
+    """The broadcast-anti path (default) and the fused path
+    (broadcast_keys_max=0) apply the same LWW and give the same table,
+    including the collapse of a duplicate-offset replay row."""
     rows = [("r", f"p{i}", f"v{i}", "py") for i in range(10)]
-    batches = []
-    for s in ("agg", "window", "window_salted"):
-        path = f"{tmp_table}_{s}"
-        t = _table(spark, path, rows)
-        batch = spark.createDataFrame(
-            [
-                ("r", "p0", "a", "py", "u", 10),
-                ("r", "p0", "b", "py", "u", 30),
-                ("r", "p0", "c", "py", "u", 20),
-                ("r", "p1", None, None, "d", 11),
-                ("r", "p9", "z", "go", "u", 12),
-            ],
-            BATCH_DDL,
-        )
+    batch = spark.createDataFrame(
+        [
+            ("r", "p0", "a", "py", "u", 10),
+            ("r", "p0", "b", "py", "u", 30),
+            ("r", "p0", "b", "py", "u", 30),  # duplicate replay
+            ("r", "p0", "c", "py", "u", 20),
+            ("r", "p1", None, None, "d", 11),
+            ("r", "p9", "z", "go", "u", 12),
+            ("r", "new", "n", "go", "c", 13),
+        ],
+        BATCH_DDL,
+    )
+    expected = sorted(
+        [("r", f"p{i}", f"v{i}", "py") for i in range(2, 9)]
+        + [("r", "p0", "b", "py"), ("r", "p9", "z", "go"), ("r", "new", "n", "go")]
+    )
+    for kw in ({}, {"broadcast_keys_max": 0}):
+        t = _table(spark, f"{tmp_table}_{'fused' if kw else 'bc'}", rows)
         merge_upsert(
-            t, batch, ["repo", "path"], ["offset", "op"],
-            summary={"epoch": 1}, lww_strategy=s,
+            t, batch, ["repo", "path"], ["offset", "op"], summary={"epoch": 1}, **kw
         )
-        batches.append(
-            sorted(tuple(r) for r in t.read(spark).collect())
-        )
-    assert batches[0] == batches[1] == batches[2]
-    got = {r[1]: r[2] for r in batches[0]}
-    assert got["p0"] == "b" and "p1" not in got and got["p9"] == "z"
+        got = sorted(tuple(r) for r in t.read(spark).select(*SCHEMA.names).collect())
+        assert got == expected, kw
 
 
 def test_merge_winner_join_equivalent(spark, tmp_table):
-    """winner-join LWW (slim agg + broadcast winners) must produce the
-    same table as the fused agg, including duplicate-offset collapse."""
+    """The broadcast-anti winner path must produce the same table as the
+    fused agg, including duplicate-offset collapse."""
     rows = [("r", f"p{i}", f"v{i}", "py") for i in range(10)]
     results = []
-    for wb_max in (0, 10_000_000):  # fused-agg vs winner-join
-        t = _table(spark, f"{tmp_table}_wb{wb_max}", rows)
+    for bk_max in (0, 4_000_000):  # fused-agg vs broadcast-anti
+        t = _table(spark, f"{tmp_table}_bk{bk_max}", rows)
         batch = spark.createDataFrame(
             [
                 ("r", "p0", "a", "py", "u", 10),
@@ -223,10 +225,37 @@ def test_merge_winner_join_equivalent(spark, tmp_table):
         )
         merge_upsert(
             t, batch, ["repo", "path"], ["offset", "op"],
-            summary={"epoch": 1}, broadcast_keys_max=0,  # force fused path
-            winner_broadcast_max=wb_max,
+            summary={"epoch": 1}, broadcast_keys_max=bk_max,
         )
         results.append(sorted(tuple(r) for r in t.read(spark).collect()))
     assert results[0] == results[1]
     got = {r[1]: r[2] for r in results[0]}
     assert got["p0"] == "b" and "p1" not in got and got["new"] == "n"
+
+
+def test_merge_empty_target_plan_error_shuts_stats_pool(spark, tmp_table):
+    """On the empty-target path the stats job is submitted to a pool
+    before the merge plan is built; a plan-construction error (here an
+    after_set column the batch lacks) must propagate and leave no pool
+    thread behind."""
+    import threading
+
+    import pytest
+    from pyspark.errors import AnalysisException
+
+    def pool_threads():
+        return {
+            th for th in threading.enumerate()
+            if th.name.startswith("ThreadPoolExecutor")
+        }
+
+    t = _table(spark, tmp_table, [])
+    batch = spark.createDataFrame([("r", "a", "v", "py", "c", 1)], BATCH_DDL)
+    before = pool_threads()
+    with pytest.raises(AnalysisException):
+        merge_upsert(
+            t, batch, ["repo", "path"], ["offset", "op"],
+            summary={"epoch": 1}, after_set_col="after_set",
+        )
+    assert pool_threads() <= before
+    assert t.version() == 0

@@ -247,6 +247,68 @@ def test_apply_batch_out_of_order_is_per_table(spark, tmp_path, fixtures):
     assert orch.engines["files_01"].metrics()["counters"]["events_in"] > 0
 
 
+def _record_stats_rows(orch):
+    """Wrap every engine's apply_epoch to record the stats_rows the
+    orchestrator hands it."""
+    seen = {}
+    for name, eng in orch.engines.items():
+        def rec(*a, _name=name, _orig=eng.apply_epoch, **kw):
+            seen[_name] = kw.get("stats_rows")
+            return _orig(*a, **kw)
+
+        eng.apply_epoch = rec
+    return seen
+
+
+def _stat_tuples(rows):
+    from debezium_incubator_spark.lake.table import BUCKET_COL
+
+    return sorted(
+        (r[BUCKET_COL], r["max_off"], r["n"], r["n_del"], r["n_tomb"], r["key_bytes"])
+        for r in rows
+    )
+
+
+def test_shared_stats_pass_equals_batch_stats_rows(spark, tmp_path, fixtures):
+    """apply_batch's ONE per-(table, bucket) stats pass hands each table
+    exactly what batch_stats_rows computes over that engine's guarded
+    batch; a table with a different bucket function turns it off."""
+    src, log = fixtures
+    ops = {r["op"] for r in log.select("op").distinct().collect()}
+    assert {"c", "u", "d", "t"} <= ops
+
+    orch = MultiTableCDC(spark, str(tmp_path / "shared"), num_buckets=4)
+    orch.create_table("files_00")
+    orch.create_table("files_01")
+    orch.bootstrap(src)
+    assert orch._stats_homogeneous()
+    expected = {}
+    for name, eng in orch.engines.items():
+        rows = log.filter(F.col("source.table") == name)
+        ckpt = eng._reconcile(eng.store.latest())
+        expected[name] = _stat_tuples(eng.slice_stats(rows, ckpt))
+    seen = _record_stats_rows(orch)
+    orch.apply_batch(log)
+    for name in ("files_00", "files_01"):
+        assert seen[name] is not None, name
+        got = _stat_tuples(seen[name])
+        assert got == expected[name], name
+        assert sum(s[3] for s in got) > sum(s[4] for s in got) > 0, name
+
+    # a different num_buckets on one table: the shared pass is skipped
+    # and every merge collects its own stats; the result is unchanged
+    orch2 = MultiTableCDC(spark, str(tmp_path / "mixed"), num_buckets=4)
+    orch2.create_table("files_00")
+    orch2.create_table("files_01", num_buckets=8)
+    orch2.bootstrap(src)
+    assert not orch2._stats_homogeneous()
+    seen2 = _record_stats_rows(orch2)
+    orch2.apply_batch(log)
+    assert seen2 == {"files_00": None, "files_01": None}
+    for name in ("files_00", "files_01"):
+        assert _final(orch2, name) == _final(orch, name)
+
+
 def test_maintain_shared_changelog_gc(spark, tmp_path, fixtures):
     """Orchestrator-level K4: the shared changelog GC's watermark is the
     MIN across all tables — a lagging table blocks segment archival;
